@@ -5,16 +5,22 @@ from __future__ import annotations
 
 import json
 import time
+from datetime import datetime
+
+import pandas as pd
+import pytest
 
 from trike_spark.streaming.framing import (
     CHUNK_SCHEMA,
     EOT,
     extract,
+    frame_and_session,
     framed_stream,
 )
 
 MSG1 = "4994,TSCH,02:00:06,R,RLD,W"
 MSG2 = "4995,TSCH,03:00:06,R,RLD,W"
+TS = datetime(2021, 8, 13, 12, 0, 0)
 
 
 class TestExtract:
@@ -42,10 +48,7 @@ class TestExtract:
 
 
 def _chunk_rows(*chunks: tuple[str, str]) -> list[tuple]:
-    from datetime import datetime
-
-    t = datetime(2021, 8, 13, 12, 0, 0)
-    return [(conn, chunk, t, i) for i, (conn, chunk) in enumerate(chunks)]
+    return [(conn, chunk, TS, i) for i, (conn, chunk) in enumerate(chunks)]
 
 
 def test_framed_stream_batchlike(spark, tmp_path):
@@ -101,3 +104,67 @@ def test_framed_stream_batchlike(spark, tmp_path):
         q.stop()
     msgs = sorted((r["conn_id"], r["raw"]) for r in out if r["kind"] == "message")
     assert msgs == [("a", MSG1), ("a", MSG2)]  # b's partial stays buffered
+
+
+class _FakeGroupState:
+    """The slice of GroupState that frame_and_session touches on input."""
+
+    hasTimedOut = False
+
+    def __init__(self):
+        self.value = None
+
+    @property
+    def exists(self):
+        return self.value is not None
+
+    @property
+    def get(self):
+        return self.value
+
+    def update(self, v):
+        self.value = v
+
+    def setTimeoutDuration(self, ms):
+        pass
+
+
+def _key_batch(conn: str, *chunks: tuple[str, int]) -> pd.DataFrame:
+    return pd.DataFrame(
+        {
+            "conn_id": [conn] * len(chunks),
+            "chunk": [c for c, _ in chunks],
+            "arrival_ts": [TS] * len(chunks),
+            "arrival_seq": [seq for _, seq in chunks],
+        }
+    )
+
+
+def _framed_messages(conn: str, pdfs: list[pd.DataFrame]) -> list[str]:
+    out = frame_and_session((conn,), iter(pdfs), _FakeGroupState(), 60_000)
+    return [r["raw"] for pdf in out for r in pdf.to_dict("records") if r["kind"] == "message"]
+
+
+def test_duplicate_arrival_seq_fails_loudly():
+    """A duplicate (conn_id, arrival_seq) pair means the source's order
+    signal has ties (the dev socket source stamps at millisecond
+    resolution), so the stitch order, and with it the reassembled frame,
+    is arbitrary. Framing must refuse rather than emit a possibly
+    corrupted message."""
+    dup = _key_batch("a", (MSG1[:10], 7), (MSG1[10:] + EOT, 7))
+    with pytest.raises(ValueError, match="duplicate arrival_seq"):
+        _framed_messages("a", [dup])
+
+    # unique seqs on the same payload still frame fine (control)
+    ok = _key_batch("a", (MSG1[:10], 7), (MSG1[10:] + EOT, 8))
+    assert _framed_messages("a", [ok]) == [MSG1]
+
+
+def test_cross_chunk_order_restored_before_stitch():
+    """Arrow may deliver one key's micro-batch as several chunks in any
+    order; framing must sort the concatenation by arrival_seq (a per-chunk
+    sort would stitch later bytes first and corrupt the frame silently).
+    The later half of a split frame arrives in the first chunk here."""
+    first_half = _key_batch("a", (MSG1[:10], 3))
+    second_half = _key_batch("a", (MSG1[10:] + EOT, 8))
+    assert _framed_messages("a", [second_half, first_half]) == [MSG1]

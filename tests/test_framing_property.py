@@ -74,7 +74,7 @@ chunk_lists = st.lists(
 )
 @settings(max_examples=200, deadline=None)
 def test_frame_batch_matches_extract_loop(data, texts, carry, nseq0):
-    """frame_batch (the vectorized kernel both stateful twins run) must be
+    """frame_batch (the vectorized kernel frame_and_session runs) must be
     OUTPUT-IDENTICAL to the per-chunk extract loop it replaced: same
     messages, same packet-shared timestamps (each message stamped with the
     chunk containing its terminating EOT), same monotonic seq, same carry
