@@ -64,33 +64,56 @@ def _poll(spark, q, out, pred, timeout=90):
     raise AssertionError(f"timeout; rows={_read(spark, out)}")
 
 
+def _state_partitions(q, timeout=30):
+    """numShufflePartitions of the framing state operator, from the query's
+    progress (reported just after a micro-batch commits, so poll briefly)."""
+    deadline = time.time() + timeout
+    while time.time() < deadline:
+        progress = q.lastProgress
+        if progress and progress["stateOperators"]:
+            return progress["stateOperators"][0]["numShufflePartitions"]
+        time.sleep(0.5)
+    raise AssertionError("no state-operator progress reported")
+
+
 def test_partial_frame_survives_restart(spark, tmp_path):
+    """The buffered half-frame comes back from the checkpoint, and the
+    checkpoint fixes the state-partition count at the query's first
+    start: the restart runs at the recorded 32 although the session
+    conf says 4."""
     src = tmp_path / "in"
     src.mkdir()
     ckpt = tmp_path / "ckpt"
-
-    # phase 1: a complete message + a PARTIAL frame, then stop the query
-    half1, half2 = MSG[:12], MSG[12:]
-    _write(src, "c1.json", "conn-1", MSG + EOT + half1, 0)
-    out = tmp_path / "out"
-    q1 = _start(spark, src, ckpt, out)
+    orig = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        _poll(spark, q1, out, lambda rows: any(r["raw"] == MSG for r in rows))
-    finally:
-        q1.stop()
+        # phase 1: a complete message + a PARTIAL frame, then stop the query
+        spark.conf.set("spark.sql.shuffle.partitions", "32")
+        half1, half2 = MSG[:12], MSG[12:]
+        _write(src, "c1.json", "conn-1", MSG + EOT + half1, 0)
+        out = tmp_path / "out"
+        q1 = _start(spark, src, ckpt, out)
+        try:
+            _poll(spark, q1, out, lambda rows: any(r["raw"] == MSG for r in rows))
+            assert _state_partitions(q1) == 32
+        finally:
+            q1.stop()
 
-    # phase 2: the rest of the frame arrives AFTER restart; the buffered
-    # half must come back from the checkpointed state store
-    _write(src, "c2.json", "conn-1", half2 + EOT, 1)
-    q2 = _start(spark, src, ckpt, out)
-    try:
-        rows = _poll(
-            spark, q2, out,
-            lambda rows: sum(1 for r in rows if r["raw"] == MSG) >= 2,
-        )
-        msgs = [r for r in rows if r["raw"] == MSG]
-        # one from phase 1 (complete frame) + exactly one stitched after
-        # recovery from the checkpointed buffer — no loss, no duplication
-        assert len(msgs) == 2
+        # phase 2: the rest of the frame arrives AFTER restart; the buffered
+        # half must come back from the checkpointed state store
+        spark.conf.set("spark.sql.shuffle.partitions", "4")
+        _write(src, "c2.json", "conn-1", half2 + EOT, 1)
+        q2 = _start(spark, src, ckpt, out)
+        try:
+            rows = _poll(
+                spark, q2, out,
+                lambda rows: sum(1 for r in rows if r["raw"] == MSG) >= 2,
+            )
+            msgs = [r for r in rows if r["raw"] == MSG]
+            # one from phase 1 (complete frame) + exactly one stitched after
+            # recovery from the checkpointed buffer — no loss, no duplication
+            assert len(msgs) == 2
+            assert _state_partitions(q2) == 32
+        finally:
+            q2.stop()
     finally:
-        q2.stop()
+        spark.conf.set("spark.sql.shuffle.partitions", orig)

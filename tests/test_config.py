@@ -44,3 +44,13 @@ def test_local_cluster_memory_guard(monkeypatch):
         _check_local_cluster_memory("local-cluster[2,8]")
     monkeypatch.setenv("SPARK_EXECUTOR_MEMORY", "2g")
     _check_local_cluster_memory("local-cluster[2,8,4096]")  # now fits
+
+
+def test_shuffle_partitions_default_to_host_cores(monkeypatch):
+    """Unset, the shuffle-partition count follows the cores the master
+    runs on; an explicit SPARK_SHUFFLE_PARTITIONS still wins."""
+    monkeypatch.delenv("SPARK_SHUFFLE_PARTITIONS", raising=False)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert EngineConfig().shuffle_partitions == 3
+    monkeypatch.setenv("SPARK_SHUFFLE_PARTITIONS", "32")
+    assert EngineConfig().shuffle_partitions == 32

@@ -5,6 +5,7 @@ round notes and future drivers consume)."""
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import sys
 
@@ -25,7 +26,7 @@ def test_stream_bench_emits_contract_json(sink):
         out = subprocess.run(
             [
                 sys.executable,
-                "/root/repo/tools/stream_bench.py",
+                os.path.join(os.path.dirname(__file__), "..", "tools", "stream_bench.py"),
                 "--rows-per-second",
                 "1500",
                 "--duration",
@@ -53,5 +54,6 @@ def test_stream_bench_emits_contract_json(sink):
     assert payload["micro_batches"] >= 3
     assert payload["connections"] == 4
     assert payload["sink"] == sink
+    assert payload["state_partitions"] >= 1
     assert payload["batch_gap_p50_sec"] >= 0
     assert payload["batch_gap_p95_sec"] >= payload["batch_gap_p50_sec"]

@@ -14,7 +14,9 @@ import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# the checkout this file lives in, so callers importing value_hash from
+# another checkout never pick up a different engine
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_CHECK_SF_DIR", "/root/testdata/sf0.01")
 TABLES = (

@@ -48,11 +48,12 @@ from __future__ import annotations
 import argparse
 import json
 import math
+import os
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
@@ -92,8 +93,6 @@ def main() -> None:
     )
     args = ap.parse_args()
     if args.master:
-        import os
-
         os.environ["SPARK_MASTER"] = args.master
 
     from trike_spark.session import get_spark
@@ -267,6 +266,9 @@ def main() -> None:
                     lats[max(0, math.ceil(0.95 * len(lats)) - 1)], 2
                 ),
             }
+    # state-partition count the framing operator actually ran at (fixed by
+    # the checkpoint at first start, so read it back, not from the conf)
+    state_partitions = q.lastProgress["stateOperators"][0]["numShufflePartitions"]
     print(
         json.dumps(
             {
@@ -288,6 +290,7 @@ def main() -> None:
                     "can over-count; exact on a healthy local run)"
                 ),
                 "trigger_ms": args.trigger_ms,
+                "state_partitions": state_partitions,
                 "batch_gap_p50_sec": round(p50, 2),
                 "batch_gap_p95_sec": round(p95, 2),
                 **lat_fields,

@@ -29,8 +29,20 @@ class EngineConfig:
             "SPARK_MASTER", f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
         )
     )
+    # spark.sql.shuffle.partitions: the host's cores (SPARK_GRAFT_CPUS, else
+    # the CPU affinity). Per-task fixed cost, not data, dominates a
+    # micro-batch, and streaming plans get no AQE, so the state operator
+    # and the sink's exchange run exactly this many tasks per micro-batch
+    # (docs/BENCH_NOTES.md: 32 partitions on 4 cores cost ~5x the
+    # latency). Batch plans are unaffected: AQE coalesces their shuffles.
+    # A streaming query fixes its state-partition count at its first
+    # start; a restart from its checkpoint keeps the recorded count.
     shuffle_partitions: int = field(
-        default_factory=lambda: int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", "32"))
+        default_factory=lambda: int(
+            os.environ.get("SPARK_SHUFFLE_PARTITIONS")
+            or os.environ.get("SPARK_GRAFT_CPUS")
+            or len(os.sched_getaffinity(0))
+        )
     )
     # trike's stale connection timeout (reference config/config.exs:19)
     stale_timeout_ms: int = field(

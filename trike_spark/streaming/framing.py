@@ -15,6 +15,8 @@ Spark mapping: ``applyInPandasWithState`` keyed by ``conn_id``:
 Scale: state partitions by conn_id across the cluster; each connection's
 buffer is a few KiB (socket-buffer bounded upstream), so state size is
 O(live connections), exactly like the reference's per-process heap usage.
+The number of state partitions is ``spark.sql.shuffle.partitions`` at the
+query's first start, fixed from then on by its checkpoint.
 
 CHECKPOINT MIGRATION NOTE (round 1 → round 2): ``_STATE_SCHEMA`` gained an
 ``nseq BIGINT`` field (per-connection monotonic frame counter) and

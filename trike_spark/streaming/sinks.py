@@ -175,7 +175,11 @@ def _encoded_records(batch_df: DataFrame, max_bytes: int) -> DataFrame:
 
 @dataclass
 class KinesisSink:
-    """foreachBatch sink with per-key sequence-number chaining."""
+    """foreachBatch sink with per-key sequence-number chaining.
+
+    The per-key window in :func:`_encoded_records` adds an exchange that
+    runs at the session's ``spark.sql.shuffle.partitions``, uncoalesced:
+    the ``foreachBatch`` frame is planned without AQE."""
 
     stream: str = "console"
     client: Any = None  # injectable, like the reference's put_record_fn
